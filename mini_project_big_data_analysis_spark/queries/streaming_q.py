@@ -102,10 +102,10 @@ def stream_tws_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumer.py:21-23) and the sink must hash-equal the single-delivery
     event log — one surviving duplicate or lost key breaks the hash.
 
-    Registered in round 16 after vendoring a minimal pure-Python protobuf
-    runtime (vendor/google/protobuf/_mini_runtime.py) for the state-server
-    protocol this container's pyspark could not drive before — see
-    streaming/pipeline.py:tws_available."""
+    One mechanism: the state API, whose state-server protocol needs
+    google.protobuf in the Python workers — an installed distribution or
+    the vendored pure-Python runtime (vendor/google/protobuf/), provisioned
+    for the session by ``run_tws_dedup``, which raises if it cannot be."""
     from ..streaming.pipeline import run_tws_dedup
 
     return run_tws_dedup(spark, sf_dir)
@@ -161,17 +161,14 @@ def stream_weather_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     10-minute tumbling windows on the observation's epoch time; the bounded
     stream (max_cycles) drains under processAllAvailable and the memory
     sink holds the complete-mode result."""
-    import uuid as _uuid
-
     from ..sources.weather_source import register_weather_source
-    from ..streaming.pipeline import _drain_and_stop, _stream_session
+    from ..streaming.pipeline import _stream_session, new_run, start_and_wait
 
     # 16 rows per poll sweep: state partitioning derives to the floor (4)
     # instead of the batch default — the windowed agg's state stores pay
     # per-instance commit cost every one of the 10 micro-batches.
     spark = _stream_session(spark, 0)
     register_weather_source(spark)
-    name = f"wx_{_uuid.uuid4().hex[:10]}"
     agg = (
         spark.readStream.format("weather_poll")
         .option("max_cycles", 10)
@@ -197,14 +194,9 @@ def stream_weather_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             "avg_temp",
         )
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .start()
+    return start_and_wait(
+        spark, agg, new_run("wx"), mode="complete", table=True, paced=True
     )
-    _drain_and_stop(q, spark)
-    return spark.table(name)
 
 
 @register(

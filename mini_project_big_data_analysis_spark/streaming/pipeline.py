@@ -16,14 +16,33 @@ Tests drive these with file-source streams over the driver's events parquet
 (Kafka isn't in the container); the DataFrame graph is source-agnostic — the
 same ``clean_event_stream``/``tumbling_agg`` compose onto
 ``spark.readStream.format("kafka")`` unchanged.
+
+Every runner goes through one run harness. ``new_run(kind)`` makes the
+run's directory, ``<tmp>/mpbda_stream/<kind>_<8 hex>/``, whose name also
+names the run's query and memory table:
+
+- ``ck/``   the query's checkpoint;
+- ``sink/`` the foreachBatch output — by default ``batch_writer``'s
+  ``batch_id=N`` subdirectories, each overwritten by its own micro-batch,
+  so a replayed batch rewrites instead of duplicating — or a keyed store;
+- ``in/``   the arrival files of a paced run (``arrival_stream``), or the
+  replayed deliveries of ``run_stream_dedup_availablenow``.
+
+``start_and_wait`` starts a query into a memory table or a foreachBatch
+writer, waits for it (``_await_done`` under availableNow, ``_drain_and_stop``
+for a paced source) and returns the result frame.
 """
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
 import tempfile
+import time
 import uuid
-import warnings
+from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,6 +51,7 @@ from pyspark.sql import types as T
 
 from ..schemas import EVENTS
 from ..sources.events import raw_epoch_to_ts
+from ..vendor import provision_protobuf_for_session
 
 #: The on-disk shape: ``ts`` is INT64 TIMESTAMP(NANOS), which Spark's reader
 #: only accepts as a long (sources/events.py) — declared long here, converted
@@ -277,6 +297,143 @@ def _read_sink_or_empty(spark: SparkSession, path: str, ddl: str) -> DataFrame:
     return spark.read.parquet(path).select(*[f.name for f in schema.fields])
 
 
+#: Columns and written types of the consumer-shaped sinks (cleaned
+#: events), and the written types of the paced stateful runners' rows,
+#: whose ``ts`` stays a timestamp until read-back.
+_CLEAN_COLS = ("event_id", "user_id", "event_type", "value")
+_CLEAN_DDL = "event_id long, user_id long, event_type string, value double"
+_TIMED_DDL = "event_id long, user_id long, ts timestamp, value double"
+
+
+class StreamRun(NamedTuple):
+    """One streaming run's on-disk layout (module docstring)."""
+
+    name: str
+    base: str
+    ck: str
+    sink: str
+    indir: str
+
+
+def new_run(kind: str) -> StreamRun:
+    """A fresh run directory; ``ck/``, ``sink/`` and ``in/`` are made by
+    whatever writes them first."""
+    name = f"{kind}_{uuid.uuid4().hex[:8]}"
+    base = os.path.join(tempfile.gettempdir(), "mpbda_stream", name)
+    os.makedirs(base)
+    ck, sink, indir = (os.path.join(base, d) for d in ("ck", "sink", "in"))
+    return StreamRun(name, base, ck, sink, indir)
+
+
+def batch_writer(path: str) -> Callable[[DataFrame, int], None]:
+    """The idempotent foreachBatch sink: micro-batch N overwrites
+    ``path/batch_id=N``, so a batch replayed after a partial write +
+    restart rewrites the same directory instead of appending duplicates."""
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.write.mode("overwrite").parquet(
+            os.path.join(path, f"batch_id={batch_id}")
+        )
+
+    return write_batch
+
+
+def start_and_wait(
+    spark: SparkSession,
+    frame: DataFrame,
+    run: StreamRun,
+    *,
+    mode: str = "append",
+    table: bool = False,
+    writer: Callable[[DataFrame, int], None] | None = None,
+    ddl: str | None = None,
+    paced: bool = False,
+) -> DataFrame | None:
+    """Run ``frame``'s streaming query to completion under ``run`` and
+    return its result.
+
+    The sink is the memory table ``run.name`` when ``table``, else the
+    foreachBatch ``writer`` (default ``batch_writer(run.sink)``). An
+    unpaced query runs with Trigger.AvailableNow and is awaited with
+    ``_await_done``; a ``paced`` one keeps its source's own pacing
+    (``maxFilesPerTrigger``, poll cycles) and is drained with
+    ``_drain_and_stop``. ``spark`` must be the session ``frame`` was built
+    on (``_capture_progress`` reads its retention cap).
+
+    Returns the memory table, ``run.sink`` read back with ``ddl``, or None
+    when neither applies (a writer with its own store reads it back)."""
+    w = (
+        frame.writeStream.queryName(run.name)
+        .outputMode(mode)
+        .option("checkpointLocation", run.ck)
+    )
+    if table:
+        w = w.format("memory")
+    else:
+        w = w.foreachBatch(writer or batch_writer(run.sink))
+    if not paced:
+        w = w.trigger(availableNow=True)
+    q = w.start()
+    (_drain_and_stop if paced else _await_done)(q, spark)
+    if table:
+        return spark.table(run.name)
+    return _read_sink_or_empty(spark, run.sink, ddl) if ddl else None
+
+
+def arrival_stream(
+    spark: SparkSession, run: StreamRun, pieces: list[DataFrame]
+) -> DataFrame:
+    """Write ``pieces`` as one time-ordered parquet file each
+    (``run.indir/00.parquet``, ``01.parquet``, … with ascending mtimes) and
+    return the paced file stream over them: ``maxFilesPerTrigger=1`` replays
+    the files in that arrival order, one micro-batch each.
+
+    The files come from ONE Spark job. The round-15 shape wrote each piece
+    with its own ``coalesce(1)`` job — N scans of the source and N
+    sequential single-task jobs before the stream even started (for the
+    four-quarter splitter that was 5 of the id's ~11 jobs). Tagging each
+    piece and writing once with ``partitionBy`` keeps every piece in
+    exactly one task (hash repartition on the literal tag: a tag maps to
+    one partition, so each piece directory holds exactly one part file)
+    and runs the legs in parallel inside a single job. A piece with no
+    rows produces no directory under dynamic partitioning where the old
+    path wrote an empty part file — the fallback writes that empty file so
+    the stream sees the identical batch sequence (scripts/empty_sweep.py
+    pins the zero-row fixture)."""
+    os.makedirs(run.indir)
+    tagged = None
+    for i, piece in enumerate(pieces):
+        t = piece.withColumn("__piece", F.lit(i))
+        tagged = t if tagged is None else tagged.unionByName(t)
+    tmp = os.path.join(run.base, "tmp")
+    (
+        tagged.repartition(len(pieces), "__piece")
+        .write.mode("overwrite")
+        .partitionBy("__piece")
+        .parquet(tmp)
+    )
+    now = time.time()
+    for i, piece in enumerate(pieces):
+        parts = glob.glob(os.path.join(tmp, f"__piece={i}", "part-*.parquet"))
+        dst = os.path.join(run.indir, f"{i:02d}.parquet")
+        if parts:
+            shutil.move(parts[0], dst)
+        else:  # empty piece: write the empty file the old per-piece job made
+            empty_tmp = os.path.join(run.base, f"tmp_empty_{i}")
+            piece.limit(0).coalesce(1).write.mode("overwrite").parquet(empty_tmp)
+            shutil.move(
+                glob.glob(os.path.join(empty_tmp, "part-*.parquet"))[0], dst
+            )
+            shutil.rmtree(empty_tmp)
+        os.utime(dst, (now - 500 + i * 100,) * 2)  # mtime = arrival order
+    shutil.rmtree(tmp)
+    return (
+        spark.readStream.schema(pieces[0].schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(run.indir)
+    )
+
+
 def decode_kafka_events(raw: DataFrame) -> DataFrame:
     """Kafka wire records (binary key/value + metadata) → typed event rows:
     the consumer's JSON deserializer (consumer.py:24) as engine code.
@@ -399,24 +556,15 @@ def run_tumbling_agg_availablenow(
     emission executor-side; the upstream agg/state graph is unchanged.
     """
     spark = _stream_session(spark, _events_bytes(sf_dir))
-    name = f"tumbling_{uuid.uuid4().hex[:8]}"
-    checkpoint = os.path.join(tempfile.gettempdir(), "mpbda_ckpt", name)
-    q = (
-        tumbling_agg(clean_event_stream(read_events_stream(spark, sf_dir)), window_duration)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    agg = tumbling_agg(
+        clean_event_stream(read_events_stream(spark, sf_dir)), window_duration
     )
-    _await_done(q, spark)
-    return spark.table(name)
+    return start_and_wait(
+        spark, agg, new_run("tumbling"), mode="complete", table=True
+    )
 
 
-def run_clean_to_parquet_availablenow(
-    spark: SparkSession, sf_dir: str, out_path: str | None = None
-) -> DataFrame:
+def run_clean_to_parquet_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The consumer's full pipeline (consumer.py:29-78) as Structured
     Streaming with an idempotent foreachBatch parquet sink: source offsets
     are checkpointed and each micro-batch lands in its own ``batch_id=N``
@@ -427,28 +575,10 @@ def run_clean_to_parquet_availablenow(
     of the sink — which must equal the batch-cleaned table (the oracle
     checks exactly that, and stays equal under replay).
     """
-    name = f"sink_{uuid.uuid4().hex[:8]}"
-    checkpoint = os.path.join(tempfile.gettempdir(), "mpbda_ckpt", name)
-    path = out_path or os.path.join(tempfile.gettempdir(), "mpbda_stream_sink", name)
-
     cleaned = clean_event_stream(read_events_stream(spark, sf_dir)).select(
-        "event_id", "user_id", "event_type", "value"
+        *_CLEAN_COLS
     )
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # batch_id-keyed overwrite = idempotent under micro-batch replay.
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(path, f"batch_id={batch_id}")
-        )
-
-    q = (
-        cleaned.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q, spark)
-    return _read_sink_or_empty(spark, path, "event_id long, user_id long, event_type string, value double")
+    return start_and_wait(spark, cleaned, new_run("sink"), ddl=_CLEAN_DDL)
 
 
 def run_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -461,11 +591,11 @@ def run_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     (stateless join, append mode, no watermark needed); at 100 TB of stream
     the dim is still broadcast-sized — the same plan shape. STRONG oracle:
     the enriched sink must equal the batch left-join over the same tables.
+    The batch_id-keyed parquet sink scales with the sink store, where a
+    memory sink would cap the runner at driver heap.
     """
     from ..sources.readers import read_table
 
-    name = f"enrich_{uuid.uuid4().hex[:8]}"
-    checkpoint = os.path.join(tempfile.gettempdir(), "mpbda_ckpt", name)
     stream = clean_event_stream(read_events_stream(spark, sf_dir))
     customer = read_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_nationkey"
@@ -482,26 +612,11 @@ def run_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.coalesce("n_name", F.lit("unknown")).alias("nation"),
     )
-    # Production sink shape (round 11): batch_id-keyed idempotent parquet
-    # via foreachBatch, like run_clean_to_parquet_availablenow — a memory
-    # sink materializes the whole result driver-side (dev-tool shape) and
-    # caps the runner at driver heap; this one scales with the sink store.
-    path = os.path.join(tempfile.gettempdir(), "mpbda_stream_sink", name)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(path, f"batch_id={batch_id}")
-        )
-
-    q = (
-        enriched.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q, spark)
-    return _read_sink_or_empty(
-        spark, path, "event_id long, user_id long, event_type string, nation string"
+    return start_and_wait(
+        spark,
+        enriched,
+        new_run("enrich"),
+        ddl="event_id long, user_id long, event_type string, nation string",
     )
 
 
@@ -518,36 +633,27 @@ def run_fanout_sinks_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame
     either. Returns both sinks' contents tagged by sink id — the STRONG
     oracle checks each equals the batch-cleaned table (a lost or doubled
     batch in EITHER sink breaks the hash)."""
-    name = f"fanout_{uuid.uuid4().hex[:8]}"
-    checkpoint = os.path.join(tempfile.gettempdir(), "mpbda_ckpt", name)
-    base = os.path.join(tempfile.gettempdir(), "mpbda_stream_sink", name)
-    path_a = os.path.join(base, "archive")
-    path_b = os.path.join(base, "serving")
-
-    cleaned = clean_event_stream(read_events_stream(spark, sf_dir)).select(
-        "event_id", "user_id", "event_type", "value"
-    )
+    run = new_run("fanout")
+    sinks = {s: os.path.join(run.sink, s) for s in ("archive", "serving")}
+    writers = [batch_writer(path) for path in sinks.values()]
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()
         try:
-            for path in (path_a, path_b):
-                batch_df.write.mode("overwrite").parquet(
-                    os.path.join(path, f"batch_id={batch_id}")
-                )
+            for write in writers:
+                write(batch_df, batch_id)
         finally:
             batch_df.unpersist()
 
-    q = (
-        cleaned.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    cleaned = clean_event_stream(read_events_stream(spark, sf_dir)).select(
+        *_CLEAN_COLS
     )
-    _await_done(q, spark)
-    a = _read_sink_or_empty(spark, path_a, "event_id long, user_id long, event_type string, value double").withColumn("sink", F.lit("archive"))
-    b = _read_sink_or_empty(spark, path_b, "event_id long, user_id long, event_type string, value double").withColumn("sink", F.lit("serving"))
-    return a.unionByName(b)
+    start_and_wait(spark, cleaned, run, writer=write_batch)
+    archive, serving = (
+        _read_sink_or_empty(spark, path, _CLEAN_DDL).withColumn("sink", F.lit(s))
+        for s, path in sinks.items()
+    )
+    return archive.unionByName(serving)
 
 
 def run_stream_dedup_availablenow(
@@ -596,47 +702,26 @@ def run_stream_dedup_availablenow(
     the sink must hash-equal the batch-cleaned single-delivery table, so a
     silently dropped key or a surviving duplicate fails the compare.
     """
-    import shutil
-
     spark = _stream_session(spark, 2 * _events_bytes(sf_dir))
-    name = f"dedup_{uuid.uuid4().hex[:8]}"
-    checkpoint = os.path.join(tempfile.gettempdir(), "mpbda_ckpt", name)
-    delivery = os.path.join(tempfile.gettempdir(), "mpbda_dedup_src", name)
-    os.makedirs(delivery, exist_ok=True)
+    run = new_run("dedup")
+    os.makedirs(run.indir)
     src = os.path.join(sf_dir, "events.parquet")
     # Two byte-identical deliveries of the same upstream data. availableNow
     # may batch them together or per-file (4.1.2 measured: one batch per
     # file); identical event times make the dedup exact either way — see
     # the docstring's skew precondition.
-    shutil.copy(src, os.path.join(delivery, "delivery_a.parquet"))
-    shutil.copy(src, os.path.join(delivery, "delivery_b.parquet"))
+    shutil.copy(src, os.path.join(run.indir, "delivery_a.parquet"))
+    shutil.copy(src, os.path.join(run.indir, "delivery_b.parquet"))
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.readStream.schema(EVENTS_RAW).parquet(delivery)
+    raw = spark.readStream.schema(EVENTS_RAW).parquet(run.indir)
     stream = clean_event_stream(raw.withColumn("ts", raw_epoch_to_ts("ts")))
     deduped = (
         stream.withWatermark("event_time", "1 hour")
         .dropDuplicatesWithinWatermark([*keys])
-        .select("event_id", "user_id", "event_type", "value")
+        .select(*_CLEAN_COLS)
     )
-    # Production sink shape (round 11): idempotent batch_id-keyed parquet
-    # instead of the driver-bound memory sink — the dedup STATE is already
-    # partition-distributed; this makes the sink side scale too.
-    path = os.path.join(tempfile.gettempdir(), "mpbda_stream_sink", name)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(path, f"batch_id={batch_id}")
-        )
-
-    q = (
-        deduped.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q, spark)
-    return _read_sink_or_empty(spark, path, "event_id long, user_id long, event_type string, value double")
+    return start_and_wait(spark, deduped, run, ddl=_CLEAN_DDL)
 
 
 def run_stateful_running_stats(
@@ -675,6 +760,7 @@ def run_stateful_running_stats(
     import pandas as pd
 
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.window import Window
 
     def partials(pdfs):
         for pdf in pdfs:
@@ -716,8 +802,6 @@ def run_stateful_running_stats(
         )
 
     spark = _stream_session(spark, _events_bytes(sf_dir))
-    name = f"stateful_{uuid.uuid4().hex[:8]}"
-    checkpoint = os.path.join(tempfile.gettempdir(), "mpbda_ckpt", name)
     stream = clean_event_stream(read_events_stream(spark, sf_dir))
     shrunk = stream.select("event_type", "value").mapInPandas(
         partials, "event_type string, pn long, ps double, pmn double, pmx double"
@@ -732,20 +816,11 @@ def run_stateful_running_stats(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        running.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    emissions = start_and_wait(
+        spark, running, new_run("stateful"), mode="update", table=True
     )
-    _await_done(q, spark)
-    emissions = spark.table(name)
     # final emission per key = the complete running totals (strong-oracle
     # shape regardless of how the source split micro-batches)
-    from pyspark.sql.window import Window
-
     w = Window.partitionBy("event_type").orderBy(F.desc("n_events"))
     return (
         emissions.withColumn("__rn", F.row_number().over(w))
@@ -769,10 +844,10 @@ def run_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     store; the time-interval condition is what lets Spark expire state at
     all. availableNow processes the fixture in one deterministic batch,
     so the sink equals the batch band-join byte-for-byte (the oracle).
+    Join output is data-proportional (pairs, not state-grain), hence the
+    parquet sink rather than a driver-bound memory table.
     """
     spark = _stream_session(spark, _events_bytes(sf_dir))
-    name = f"ssjoin_{uuid.uuid4().hex[:8]}"
-    checkpoint = os.path.join(tempfile.gettempdir(), "mpbda_ckpt", name)
     ev = clean_event_stream(read_events_stream(spark, sf_dir))
     clicks = (
         ev.filter(F.col("event_type") == "click")
@@ -806,75 +881,37 @@ def run_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.unix_timestamp("purchase_time") - F.unix_timestamp("click_time")
         ).alias("gap_s"),
     )
-    # Production sink shape (round 11): join output is DATA-proportional
-    # (pairs, not state-grain), so it lands in batch_id-keyed idempotent
-    # parquet rather than a driver-bound memory sink.
-    path = os.path.join(tempfile.gettempdir(), "mpbda_stream_sink", name)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(path, f"batch_id={batch_id}")
-        )
-
-    q = (
-        joined.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q, spark)
-    return _read_sink_or_empty(
-        spark, path, "click_id long, purchase_id long, user_id long, gap_s long"
+    return start_and_wait(
+        spark,
+        joined,
+        new_run("ssjoin"),
+        ddl="click_id long, purchase_id long, user_id long, gap_s long",
     )
 
 
-def _write_arrival_files(spark, base: str, indir: str, pieces: list) -> None:
-    """Materialize ``pieces`` as one time-ordered parquet file each
-    (``indir/00.parquet``, ``01.parquet``, … with ascending mtimes — the
-    arrival order ``maxFilesPerTrigger=1`` replays) in ONE Spark job.
+def _timed_values(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The batch events rows the paced runners replay: value and ts
+    present, four columns."""
+    from ..sources.readers import read_table
 
-    The round-15 shape wrote each piece with its own ``coalesce(1)`` job —
-    N scans of the source and N sequential single-task jobs before the
-    stream even started (for the four-quarter splitter that was 5 of the
-    id's ~11 jobs). Tagging each piece and writing once with
-    ``partitionBy`` keeps every piece in exactly one task (hash
-    repartition on the literal tag: a tag maps to one partition, so each
-    piece directory holds exactly one part file) and runs the legs in
-    parallel inside a single job. A piece with no rows produces no
-    directory under dynamic partitioning where the old path wrote an empty
-    part file — the fallback writes that empty file so the stream sees the
-    identical batch sequence (scripts/empty_sweep.py pins the zero-row
-    fixture)."""
-    import glob
-    import shutil
-    import time as _time
-
-    tagged = None
-    for i, piece in enumerate(pieces):
-        t = piece.withColumn("__piece", F.lit(i))
-        tagged = t if tagged is None else tagged.unionByName(t)
-    tmp = os.path.join(base, "tmp")
-    (
-        tagged.repartition(len(pieces), "__piece")
-        .write.mode("overwrite")
-        .partitionBy("__piece")
-        .parquet(tmp)
+    return (
+        read_table(spark, sf_dir, "events")
+        .filter(F.col("value").isNotNull() & F.col("ts").isNotNull())
+        .select("event_id", "ts", "user_id", "value")
     )
-    now = _time.time()
-    for i, piece in enumerate(pieces):
-        parts = glob.glob(os.path.join(tmp, f"__piece={i}", "part-*.parquet"))
-        dst = os.path.join(indir, f"{i:02d}.parquet")
-        if parts:
-            shutil.move(parts[0], dst)
-        else:  # empty piece: write the empty file the old per-piece job made
-            empty_tmp = os.path.join(base, f"tmp_empty_{i}")
-            piece.limit(0).coalesce(1).write.mode("overwrite").parquet(empty_tmp)
-            shutil.move(
-                glob.glob(os.path.join(empty_tmp, "part-*.parquet"))[0], dst
-            )
-            shutil.rmtree(empty_tmp)
-        os.utime(dst, (now - 500 + i * 100,) * 2)  # mtime = arrival order
-    shutil.rmtree(tmp)
+
+
+def _with_ts_s(sink: DataFrame) -> DataFrame:
+    """Read-back of a ``_TIMED_DDL`` sink with ``ts`` formatted to
+    seconds. The stateful processors keep ``ts`` a timestamp: pandas'
+    per-row strftime inside them cost ~4 µs/row × corpus in the narrowest
+    (per-group) loop, where codegen'd date_format here is free (round 16)."""
+    return sink.select(
+        "event_id",
+        "user_id",
+        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts_s"),
+        "value",
+    )
 
 
 def run_multibatch_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -896,15 +933,10 @@ def run_multibatch_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     on this runtime, below-watermark rows still aggregate. The files are
     time-ordered so nothing here depends on that behavior.)
     """
-    name = f"mb_{uuid.uuid4().hex[:8]}"
-    base = os.path.join(tempfile.gettempdir(), "mpbda_stream_in", name)
-    indir = os.path.join(base, "in")
-    os.makedirs(indir)
-    cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
     from ..sources.readers import read_table
 
     spark = _stream_session(spark, _events_bytes(sf_dir))
-
+    cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
     ev = (
         read_table(spark, sf_dir, "events")
         .filter(
@@ -933,13 +965,8 @@ def run_multibatch_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("ts", F.lit("2030-01-01 00:00:00").cast("timestamp"))
         .select(cols)
     )
-    _write_arrival_files(spark, base, indir, pieces + [sentinel])
-
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(indir)
-    )
+    run = new_run("mb")
+    src = arrival_stream(spark, run, pieces + [sentinel])
     agg = (
         src.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -973,15 +1000,8 @@ def run_multibatch_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "avg_value",
         )
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(base, "ck"))
-        .start()
-    )
-    _drain_and_stop(q, spark)
-    return spark.table(name).filter(F.col("event_type") != "sentinel")
+    out = start_and_wait(spark, agg, run, table=True, paced=True)
+    return out.filter(F.col("event_type") != "sentinel")
 
 
 def run_late_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1005,29 +1025,16 @@ def run_late_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle partition owning the key (the transformWithState scale
     posture); the payload never enters state.
     """
-    import pandas as pd
-
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from ..sources.readers import read_table
 
     spark = _stream_session(
         spark, _events_bytes(sf_dir), floor=STREAM_FLOOR_PYTHON_STATE
     )
-    name = f"late_{uuid.uuid4().hex[:8]}"
-    base = os.path.join(tempfile.gettempdir(), "mpbda_stream_in", name)
-    indir = os.path.join(base, "in")
-    os.makedirs(indir)
-    cols = ["event_id", "ts", "user_id", "value"]
-    ev = (
-        read_table(spark, sf_dir, "events")
-        .filter(F.col("value").isNotNull() & F.col("ts").isNotNull())
-        .select(cols)
-    )
-    _write_arrival_files(
+    ev = _timed_values(spark, sf_dir)
+    run = new_run("late")
+    src = arrival_stream(
         spark,
-        base,
-        indir,
+        run,
         [ev.filter(F.col("event_id") % 2 == 0), ev.filter(F.col("event_id") % 2 == 1)],
     )
 
@@ -1050,48 +1057,19 @@ def run_late_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
                 hw = batch_max if hw is None else max(hw, batch_max)
             out = pdf[mask]
             if len(out):
-                # ts stays a timestamp through the sink: pandas' per-row
-                # strftime in here cost ~4 µs/row × corpus inside the
-                # narrowest (per-group) loop — the read-back formats with
-                # codegen'd date_format instead (round 16).
                 yield out[["event_id", "user_id", "ts", "value"]]
         if hw is not None:
             state.update((hw,))
 
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(indir)
-    )
     admitted = src.groupBy("user_id").applyInPandasWithState(
         admit,
-        outputStructType="event_id long, user_id long, ts timestamp, value double",
+        outputStructType=_TIMED_DDL,
         stateStructType="hw long",
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    # Production sink shape (round 11): admitted rows are DATA-proportional
-    # — batch_id-keyed idempotent parquet, not a driver-bound memory sink.
-    sink = os.path.join(base, "sink")
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(sink, f"batch_id={batch_id}")
-        )
-
-    q = (
-        admitted.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", os.path.join(base, "ck"))
-        .start()
-    )
-    _drain_and_stop(q, spark)
-    return _read_sink_or_empty(
-        spark, sink, "event_id long, user_id long, ts timestamp, value double"
-    ).select(
-        "event_id",
-        "user_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts_s"),
-        "value",
+    return _with_ts_s(
+        start_and_wait(spark, admitted, run, paced=True, ddl=_TIMED_DDL)
     )
 
 
@@ -1115,31 +1093,19 @@ def run_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    from ..sources.readers import read_table
     from ..sources.writers import ParquetBucketStore, upsert_into
 
     spark = _stream_session(spark, _events_bytes(sf_dir))
-    name = f"fbu_{uuid.uuid4().hex[:8]}"
-    base = os.path.join(tempfile.gettempdir(), "mpbda_stream_in", name)
-    indir = os.path.join(base, "in")
-    os.makedirs(indir)
-    cols = ["event_id", "ts", "user_id", "value"]
-    ev = (
-        read_table(spark, sf_dir, "events")
-        .filter(F.col("value").isNotNull() & F.col("ts").isNotNull())
-        .select(cols)
-    )
+    ev = _timed_values(spark, sf_dir)
     mid = ev.select(
         F.percentile_approx("ts", 0.5, 10000).alias("m")
     ).first()["m"]
-    _write_arrival_files(
-        spark,
-        base,
-        indir,
-        [ev.filter(F.col("ts") < mid), ev.filter(F.col("ts") >= mid)],
+    run = new_run("fbu")
+    src = arrival_stream(
+        spark, run, [ev.filter(F.col("ts") < mid), ev.filter(F.col("ts") >= mid)]
     )
 
-    store = ParquetBucketStore(spark, os.path.join(base, "store"))
+    store = ParquetBucketStore(spark, run.sink)
     w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
 
     def merge_batch(bdf: DataFrame, batch_id: int) -> None:
@@ -1150,45 +1116,13 @@ def run_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )  # upsert contract: key-unique updates
         upsert_into(store, latest, keys=["user_id"])
 
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(indir)
-    )
-    q = (
-        src.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", os.path.join(base, "ck"))
-        .start()
-    )
-    _drain_and_stop(q, spark)
+    start_and_wait(spark, src, run, writer=merge_batch, paced=True)
     return store.read_all().select(
         "user_id",
         "event_id",
         F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts_s"),
         "value",
     )
-
-
-def tws_available() -> bool:
-    """Spark 4's transformWithStateInPandas drives its state server over
-    protobuf; this container ships pyspark without a ``google.protobuf``
-    runtime (rounds 7 and 11 audited: typeshed stubs only, no wheel, no
-    network), which gated the API through round 15.
-
-    Round 16 closed the gap the round-15 verdict asked for: the repo now
-    vendors a minimal pure-Python protobuf runtime written against the
-    PUBLIC wire-format spec (vendor/google/protobuf/_mini_runtime.py —
-    descriptor-pool bootstrap, builder, and proto3 varint/length-delimited
-    codec for exactly the StateMessage subset the pyspark state clients
-    exercise). ``enable_protobuf_shim`` appends it to sys.path only when
-    no real distribution imports (an installed protobuf always wins) and
-    prepends it to $PYTHONPATH so the Python workers — whose interpreter
-    starts from the env, not this process's sys.path — resolve it too.
-    On a standard cluster image with protobuf installed, the shim is
-    inert and this returns True through the real runtime."""
-    from ..vendor import enable_protobuf_shim
-
-    return enable_protobuf_shim()
 
 
 def run_tws_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1201,10 +1135,6 @@ def run_tws_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (consumer.py:21-23 auto-commit) — and the sink must contain every event
     EXACTLY once.
 
-    Gated by ``tws_available()`` (the API needs google.protobuf in the
-    Python workers — absent in this container, present on any standard
-    cluster image).
-
     STRONG oracle: the deduped stream equals the plain distinct event log,
     independent of batch scheduling. State is the per-user id list on the
     key's shuffle partition, checkpointed by the RocksDB provider — at
@@ -1213,66 +1143,27 @@ def run_tws_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     processor is the template for policies dropDuplicates can't express
     (TTLs, dedup-by-similarity, audit side-outputs).
 
-    protobuf reachability (round 17): the TWS state server needs
-    ``google.protobuf`` in the JVM-forked Python workers.
-    ``provision_protobuf_for_session`` covers both session origins — env
-    export pre-JVM (get_spark) and ``sc.environment`` envVars merge for an
-    externally built session (the round-16 driver harness crashed here:
-    its JVM never saw the vendor dir). If the workers still cannot import
-    it, the query falls back to Spark's own streaming dedup
-    (``dropDuplicates`` — the keyed-state shape this processor generalizes)
-    over the same arrival fixtures: identical exactly-once result, gated
-    instead of crashed.
+    The state server talks protobuf with the Python workers, so
+    ``google.protobuf`` must import there. ``provision_protobuf_for_session``
+    makes it importable under both session origins — an installed
+    distribution, else the vendored pure-Python runtime
+    (vendor/google/protobuf/), exported before the JVM starts by
+    ``get_spark`` and merged into ``sc.environment`` for an externally
+    built session. When it cannot, the query raises: there is no second
+    mechanism to degrade to.
     """
-    from ..sources.readers import read_table
-    from ..vendor import provision_protobuf_for_session
-
-    protobuf_ok = provision_protobuf_for_session(spark)
-
-    spark = _stream_session(
-        spark, _events_bytes(sf_dir), floor=STREAM_FLOOR_PYTHON_STATE
-    )
-    name = f"tws_{uuid.uuid4().hex[:8]}"
-    base = os.path.join(tempfile.gettempdir(), "mpbda_stream_in", name)
-    indir = os.path.join(base, "in")
-    os.makedirs(indir)
-    cols = ["event_id", "ts", "user_id", "value"]
-    ev = (
-        read_table(spark, sf_dir, "events")
-        .filter(F.col("value").isNotNull() & F.col("ts").isNotNull())
-        .select(cols)
-    )
-    # batch 2 = the at-least-once replay (every tenth event redelivered)
-    _write_arrival_files(
-        spark, base, indir, [ev, ev.filter(F.col("event_id") % 10 == 0)]
-    )
-
-    if protobuf_ok:
-        try:
-            return _tws_dedup_state_api(spark, ev, base, indir)
-        except Exception as exc:  # gated fallback, not a crash (VERDICT r16)
-            if "TransformWithStateInPySpark" not in f"{type(exc).__name__}: {exc}":
-                raise
-            warnings.warn(
-                "transformWithStateInPandas state-server workers could not "
-                "run (google.protobuf unreachable in the worker env); "
-                "falling back to streaming dropDuplicates — same "
-                "exactly-once result",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-    return _tws_dedup_fallback(spark, ev, base, indir)
-
-
-def _tws_dedup_state_api(
-    spark: SparkSession, ev: DataFrame, base: str, indir: str
-) -> DataFrame:
-    import pandas as pd  # noqa: F401 - the processor's frames are pandas
-
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
         StatefulProcessorHandle,
     )
+
+    if not provision_protobuf_for_session(spark):
+        raise RuntimeError(
+            "stream_tws_dedup needs google.protobuf in the Python workers "
+            "(the transformWithStateInPandas state-server protocol), and "
+            "neither an installed distribution nor the vendored runtime "
+            "could be provisioned for this session"
+        )
 
     class DedupProcessor(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
@@ -1290,8 +1181,6 @@ def _tws_dedup_state_api(
                 out = pdf[mask]
                 if len(out):
                     fresh.extend(int(x) for x in out["event_id"])
-                    # ts stays a timestamp; the read-back formats with
-                    # date_format instead of per-row pandas strftime
                     yield out[["event_id", "user_id", "ts", "value"]]
             if fresh:
                 self._seen.appendList([(i,) for i in fresh])
@@ -1299,84 +1188,25 @@ def _tws_dedup_state_api(
         def close(self) -> None:
             pass
 
+    spark = _stream_session(
+        spark, _events_bytes(sf_dir), floor=STREAM_FLOOR_PYTHON_STATE
+    )
+    ev = _timed_values(spark, sf_dir)
+    run = new_run("tws")
+    # batch 2 = the at-least-once replay (every tenth event redelivered)
+    src = arrival_stream(spark, run, [ev, ev.filter(F.col("event_id") % 10 == 0)])
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(indir)
-    )
     deduped = src.groupBy("user_id").transformWithStateInPandas(
         DedupProcessor(),
-        outputStructType="event_id long, user_id long, ts timestamp, value double",
+        outputStructType=_TIMED_DDL,
         outputMode="append",
         timeMode="none",
     )
-    # Production sink shape (round 11): deduped rows are DATA-proportional
-    # — batch_id-keyed idempotent parquet, not a driver-bound memory sink.
-    sink = os.path.join(base, "sink")
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(sink, f"batch_id={batch_id}")
-        )
-
-    q = (
-        deduped.writeStream.foreachBatch(write_batch)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(base, "ck"))
-        .start()
-    )
-    _drain_and_stop(q, spark)
-    return _read_sink_or_empty(
-        spark, sink, "event_id long, user_id long, ts timestamp, value double"
-    ).select(
-        "event_id",
-        "user_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts_s"),
-        "value",
-    )
-
-
-def _tws_dedup_fallback(
-    spark: SparkSession, ev: DataFrame, base: str, indir: str
-) -> DataFrame:
-    """Gated path when the TWS state server cannot run: Spark's own
-    streaming ``dropDuplicates`` over the SAME arrival fixtures. event_id is
-    globally unique, so per-stream dedup on it equals the per-user ListState
-    dedup exactly (same exactly-once contract, same rows). Fresh sink +
-    checkpoint dirs — the TWS attempt may have part-committed its own."""
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(indir)
-    )
-    deduped = src.dropDuplicates(["event_id"]).select(
-        "event_id", "user_id", "ts", "value"
-    )
-    sink = os.path.join(base, "sink_fb")
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(sink, f"batch_id={batch_id}")
-        )
-
-    q = (
-        deduped.writeStream.foreachBatch(write_batch)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(base, "ck_fb"))
-        .start()
-    )
-    _drain_and_stop(q, spark)
-    return _read_sink_or_empty(
-        spark, sink, "event_id long, user_id long, ts timestamp, value double"
-    ).select(
-        "event_id",
-        "user_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts_s"),
-        "value",
+    return _with_ts_s(
+        start_and_wait(spark, deduped, run, paced=True, ddl=_TIMED_DDL)
     )
 
 
@@ -1393,8 +1223,6 @@ def run_sliding_agg_availablenow(
     bounded; at real cardinality the append-mode foreachBatch form keeps
     emission executor-side."""
     spark = _stream_session(spark, _events_bytes(sf_dir))
-    name = f"sliding_{uuid.uuid4().hex[:8]}"
-    checkpoint = os.path.join(tempfile.gettempdir(), "mpbda_ckpt", name)
     agg = (
         clean_event_stream(read_events_stream(spark, sf_dir))
         .withWatermark("event_time", "10 minutes")
@@ -1412,16 +1240,9 @@ def run_sliding_agg_availablenow(
             "sum_value",
         )
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return start_and_wait(
+        spark, agg, new_run("sliding"), mode="complete", table=True
     )
-    _await_done(q, spark)
-    return spark.table(name)
 
 
 def run_session_agg_availablenow(
@@ -1434,10 +1255,13 @@ def run_session_agg_availablenow(
     window sort; here it is incremental keyed state). Complete mode +
     AvailableNow over the deterministic fixture makes the materialized
     sink exactly the batch sessionization, which is what the oracle
-    hash-checks — a dropped merge or split session breaks it."""
+    hash-checks — a dropped merge or split session breaks it.
+
+    Complete mode needs a sink that replaces the whole result per trigger:
+    a whole-directory overwrite is that sink at scale (a memory sink is
+    the same semantics materialized on the driver, capping the runner at
+    driver heap)."""
     spark = _stream_session(spark, _events_bytes(sf_dir))
-    name = f"session_{uuid.uuid4().hex[:8]}"
-    checkpoint = os.path.join(tempfile.gettempdir(), "mpbda_ckpt", name)
     agg = (
         clean_event_stream(read_events_stream(spark, sf_dir))
         .groupBy(F.session_window("event_time", gap), F.col("user_id"))
@@ -1450,25 +1274,16 @@ def run_session_agg_availablenow(
         )
         .select("user_id", "session_start", "n_events", "avg_value")
     )
-    # Production sink shape (round 11): complete mode needs a sink that can
-    # replace the whole result per trigger — foreachBatch + whole-directory
-    # overwrite is that sink at scale (a memory sink is the same semantics
-    # materialized on the DRIVER, capping the runner at driver heap).
-    path = os.path.join(tempfile.gettempdir(), "mpbda_stream_sink", name)
+    run = new_run("session")
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(path)
+    def replace_all(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.write.mode("overwrite").parquet(run.sink)
 
-    q = (
-        agg.writeStream.foreachBatch(write_batch)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q, spark)
-    return _read_sink_or_empty(
+    return start_and_wait(
         spark,
-        path,
-        "user_id long, session_start string, n_events long, avg_value double",
+        agg,
+        run,
+        mode="complete",
+        writer=replace_all,
+        ddl="user_id long, session_start string, n_events long, avg_value double",
     )

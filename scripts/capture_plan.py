@@ -13,16 +13,26 @@ import os
 import sys
 import time
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
 
 def main() -> int:
+    if len(sys.argv) < 4:
+        print(__doc__.splitlines()[2], file=sys.stderr)
+        return 2
     sf_dir, tag, *qids = sys.argv[1:]
     from mini_project_big_data_analysis_spark.queries import all_queries
     from mini_project_big_data_analysis_spark.session import get_spark
 
+    registry = all_queries()
+    unknown = [q for q in qids if q not in registry]
+    if unknown:
+        print(f"unknown query ids: {' '.join(unknown)}", file=sys.stderr)
+        return 2
     spark = get_spark(app_name="mpbda-capture")
     spark.sparkContext.setLogLevel("ERROR")
-    registry = all_queries()
-    outdir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r17")
+    outdir = os.path.join(ROOT, "plans", "r17")
     os.makedirs(outdir, exist_ok=True)
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     for qid in qids:

@@ -177,19 +177,16 @@ def test_containment_catches_asymmetric_dups(spark, sf_dir):
 def test_tws_dedup_exactly_once(spark, sf_dir):
     """transformWithStateInPandas needs google.protobuf in the workers —
     vendored as of round 16 (the mini runtime,
-    vendor/google/protobuf/_mini_runtime.py), so the gate is always open
-    here and the exactly-once property is asserted unconditionally: the
-    replayed batch's duplicates must be suppressed by the per-user
-    ListState, and nothing lost."""
+    vendor/google/protobuf/_mini_runtime.py), so the exactly-once
+    property is asserted unconditionally: the replayed batch's duplicates
+    must be suppressed by the per-user ListState, and nothing lost."""
     import pyspark.sql.functions as F
 
     from mini_project_big_data_analysis_spark.sources.readers import read_table
     from mini_project_big_data_analysis_spark.streaming.pipeline import (
         run_tws_dedup,
-        tws_available,
     )
 
-    assert tws_available(), "vendored protobuf shim failed to enable"
     got = run_tws_dedup(spark, sf_dir)
     assert got.groupBy("event_id").count().filter("count > 1").count() == 0
     expected = (
